@@ -6,15 +6,30 @@ never implemented (SURVEY.md §2.6 K17) and the weight-estimation
 influence correction ``wif`` (reference utils_aggte.py:7-36).
 
 Every aggregate is a linear combination of cell influence functions
-plus a wif term, so the whole computation is joins + groupBy over the
-long IF table: per-unit aggregated IFs never leave the executors; the
-driver sees only O(|egt|) scalars (and O(biters·|egt|) bootstrap
-partials). The wif algebra is folded into two per-cohort maps:
+plus a wif term, so an aggregation is ONE lazy pass over the long IF
+table, whatever its type. The driver composes, for every output key,
+the cell weights θ and the per-cohort wif coefficients; the overall
+ATT is one more key (``OVERALL_KEY = -1``) whose weights are a linear
+combination of the per-key ones (its IF is the same combination of
+theirs). The executors then build one ``(key, uh, inf)`` table:
 
-    wif_contrib(u) = (w_u·α_{G_u} − Sa)/P − (w_u·c_{G_u} − P)·Sa/P²
+    θ-weighted IF rows  (IF table ⋈ broadcast (cid, key, θ))
+    ∪ wif rows          (unit weights ⋈ broadcast (key, g_u, coef))
+    → groupBy(key, uh).sum
+
+which feeds one bootstrap pass for every key at once, or, without
+``bstrap``, one ``groupBy(key)`` sum of squares (the analytic SEs).
+Per-unit aggregated IFs never leave the executors; the driver sees
+O(|egt|) scalars and O(biters·|egt|) bootstrap partials.
+
+The wif term of keeper set K for unit u — utils_aggte.py's if1−if2
+summed against att — is
+
+    (w_u·α_{G_u} − Sa)/P − (w_u·c_{G_u} − P)·Sa/P²  =  w_u·(α_{G_u}/P − c_{G_u}·Sa/P²)
 
 with α_g = Σ_{k∈K: g_k=g} att_k, c_g = |{k∈K: g_k=g}|, Sa = Σ att_k·pg_k,
-P = Σ pg_k — exactly utils_aggte.py's if1−if2 summed against att.
+P = Σ pg_k. The constants cancel, so a unit outside the keeper cohorts
+contributes exactly 0 and the wif rows come from an inner join.
 """
 
 from __future__ import annotations
@@ -27,12 +42,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from csdid_pyspark_spark.cache import persist_rightsized
 from csdid_pyspark_spark.did.mboot import mboot
 from csdid_pyspark_spark.did.preprocess import DidError
 from csdid_pyspark_spark.did.stats import norm_ppf
 
 OVERALL_KEY = -1
+_TINY_SE = math.sqrt(2.220446049250313e-16) * 10
 
 
 @dataclass
@@ -89,140 +104,144 @@ class AggteResult:
             )
 
 
-def _wif_df(unitw: DataFrame, keepers: list[dict], spark) -> DataFrame | None:
-    """Per-unit wif contribution Σ_k wif_{u,k}·att_k for keeper set K.
-    Returns (uh, wifv) over ALL inference units."""
-    if not keepers:
-        return None
+def _wif_coefs(keepers: list[dict]) -> dict[float, float]:
+    """Cohort → wif coefficient of keeper set K: unit u's wif term is
+    w_u·coef[G_u], and 0 outside the keeper cohorts."""
     P = sum(k["pg"] for k in keepers)
     Sa = sum(k["att"] * k["pg"] for k in keepers)
     per_g: dict[float, list[float]] = {}
     for k in keepers:
         a, c = per_g.get(k["g"], [0.0, 0.0])
         per_g[k["g"]] = [a + k["att"], c + 1.0]
-    gmap = spark.createDataFrame(
-        [(g, a, c) for g, (a, c) in per_g.items()], "g_u double, alpha double, cnt double"
+    return {g: a / P - c * Sa / (P * P) for g, (a, c) in per_g.items()}
+
+
+def _combine(parts) -> dict:
+    """Σ λ·d over ``(λ, d)`` pairs of sparse coefficient dicts."""
+    out: dict = {}
+    for lam, d in parts:
+        for x, v in d.items():
+            out[x] = out.get(x, 0.0) + lam * v
+    return out
+
+
+def aggte_weights(
+    typec: str,
+    infos: list[dict],
+    tlist: list[float],
+    balance_e: float | None = None,
+    min_e: float = float("-inf"),
+    max_e: float = float("inf"),
+):
+    """Driver-side algebra of one aggregation. ``infos`` are the cells
+    (cid, g, t, att, pg). Returns ``(egts, atts, att_o, theta, coef)``:
+    the sorted keys' labels and ATTs, the overall ATT, and per output
+    key (``0..len(egts)-1`` and ``OVERALL_KEY``) its cell weights
+    ``theta[key][cid]`` and wif coefficients ``coef[key][g]``."""
+    if typec == "simple":
+        keep = [k for k in infos if k["g"] <= k["t"] <= k["g"] + max_e]
+        if not keep:
+            raise DidError("no post-treatment cells to aggregate")
+        tot = sum(k["pg"] for k in keep)
+        att_o = sum(k["att"] * k["pg"] for k in keep) / tot
+        theta = {OVERALL_KEY: {k["cid"]: k["pg"] / tot for k in keep}}
+        return [], [], att_o, theta, {OVERALL_KEY: _wif_coefs(keep)}
+
+    groups: dict[float, list[dict]] = {}
+    if typec == "group":
+        for k in infos:
+            if k["g"] <= k["t"] <= k["g"] + max_e:
+                groups.setdefault(k["g"], []).append(k)
+    elif typec == "calendar":
+        min_g = min(k["g"] for k in infos)
+        for k in infos:
+            if k["t"] >= min_g and k["g"] <= k["t"]:
+                groups.setdefault(k["t"], []).append(k)
+    else:  # dynamic
+        span = max(tlist) - min(tlist)
+        for k in infos:
+            e = k["t"] - k["g"]
+            if not (min_e <= e <= max_e):
+                continue
+            if balance_e is not None:
+                max_t = max(i["t"] for i in infos)
+                # R did balanced event-study window: cohorts observed
+                # for >= balance_e post periods, event times trimmed to
+                # balance_e - (t2 - t1) <= e <= balance_e — the lower
+                # trim keeps cohort composition IDENTICAL across every
+                # retained event time (without it, deep-negative e
+                # averages over a different cohort mix).
+                if max_t - k["g"] < balance_e or e > balance_e or e < balance_e - span:
+                    continue
+            groups.setdefault(e, []).append(k)
+
+    egts = sorted(groups)
+    atts: list[float] = []
+    theta: dict[int, dict] = {}
+    coef: dict[int, dict] = {}
+    for i, e in enumerate(egts):
+        ks = groups[e]
+        if typec == "group":  # equal cell weights; pg is constant within a cohort
+            theta[i] = {k["cid"]: 1.0 / len(ks) for k in ks}
+            atts.append(sum(k["att"] for k in ks) / len(ks))
+        else:
+            tot = sum(k["pg"] for k in ks)
+            theta[i] = {k["cid"]: k["pg"] / tot for k in ks}
+            atts.append(sum(k["att"] * k["pg"] / tot for k in ks))
+            coef[i] = _wif_coefs(ks)
+
+    # the overall IF is a linear combination λ of the per-key IFs, plus
+    # (group) a wif term of its own over the cohorts
+    if typec == "group":
+        pgg = [groups[g][0]["pg"] for g in egts]
+        tot = sum(pgg)
+        att_o = sum(a * p for a, p in zip(atts, pgg)) / tot
+        lam = {i: p / tot for i, p in enumerate(pgg)}
+        own = _wif_coefs([{"g": g, "att": a, "pg": p} for g, a, p in zip(egts, atts, pgg)])
+    else:
+        if typec == "calendar":
+            o_keys = list(range(len(egts)))
+        else:  # dynamic: average post-treatment event times
+            o_keys = [i for i, e in enumerate(egts) if e >= 0]
+        att_o = sum(atts[i] for i in o_keys) / len(o_keys)
+        lam = {i: 1.0 / len(o_keys) for i in o_keys}
+        own = {}
+    theta[OVERALL_KEY] = _combine((w, theta[i]) for i, w in lam.items())
+    coef[OVERALL_KEY] = _combine(
+        [(w, coef[i]) for i, w in lam.items() if i in coef] + [(1.0, own)]
     )
-    u = unitw.join(F.broadcast(gmap), "g_u", "left").na.fill({"alpha": 0.0, "cnt": 0.0})
-    wifv = (F.col("w_u") * F.col("alpha") - Sa) / P - (
-        (F.col("w_u") * F.col("cnt") - P) * Sa / (P * P)
-    )
-    return u.select("uh", wifv.alias("wifv"))
+    return egts, atts, att_o, theta, coef
 
 
-def _agg_if(
-    if_df: DataFrame,
-    cell_weights: list[tuple[int, float]],
-    wif_part: DataFrame | None,
-    spark,
-) -> DataFrame:
-    """Aggregated IF per unit: Σ θ_cid·inf_sc(u,cid) (+ wif). Returns
-    (uh, inf)."""
-    wdf = spark.createDataFrame(cell_weights, "cid int, theta double")
-    part = (
-        if_df.join(F.broadcast(wdf), "cid")
-        .groupBy("uh")
-        .agg(F.sum(F.col("theta") * F.col("inf_sc")).alias("inf"))
-    )
-    if wif_part is None:
-        return part
-    return (
-        part.join(wif_part, "uh", "full")
-        .select(
-            "uh",
-            (F.coalesce(F.col("inf"), F.lit(0.0)) + F.coalesce(F.col("wifv"), F.lit(0.0))).alias(
-                "inf"
-            ),
-        )
-    )
-
-
-def _se_of(if_tbl: DataFrame, n: int) -> float:
-    row = if_tbl.agg((F.sqrt(F.sum(F.col("inf") * F.col("inf"))) / n).alias("se")).first()
-    se = row["se"]
-    if se is None or se <= math.sqrt(2.220446049250313e-16) * 10:
-        return float("nan")
-    return float(se)
-
-
-def build_per_egt_if(
+def build_if_table(
     spark,
     if_df: DataFrame,
     unitw: DataFrame,
-    groups: dict[float, list[dict]],
-    use_wif: bool,
-    equal_w: bool = False,
-    cache: bool = True,
-    n_hint: int | None = None,
-):
-    """Build the per-egt aggregated IF table for ALL egt values in one
-    pass: a single (cid, key, theta) broadcast join + one
-    groupBy(key, uh), plus one broadcast-joined wif pass — instead of
-    one shuffle chain per event time. The full IF table is read EXACTLY
-    ONCE regardless of how many egt values are aggregated (the plan
-    property tests/test_plans.py asserts). Returns (egt_sorted, atts,
-    DataFrame(key, uh, inf))."""
-    egts = sorted(groups)
-    atts, weight_rows = [], []
-    wif_scalars, wif_gmap = [], []
-    for idx, e in enumerate(egts):
-        ks = groups[e]
-        tot = sum(k["pg"] for k in ks)
-        if equal_w:
-            weight_rows += [(k["cid"], idx, 1.0 / len(ks)) for k in ks]
-            atts.append(sum(k["att"] for k in ks) / len(ks))
-        else:
-            weight_rows += [(k["cid"], idx, k["pg"] / tot) for k in ks]
-            atts.append(sum(k["att"] * k["pg"] / tot for k in ks))
-        if use_wif:
-            P = sum(k["pg"] for k in ks)
-            Sa = sum(k["att"] * k["pg"] for k in ks)
-            wif_scalars.append((idx, Sa, P))
-            per_g: dict[float, list[float]] = {}
-            for k in ks:
-                a, c = per_g.get(k["g"], [0.0, 0.0])
-                per_g[k["g"]] = [a + k["att"], c + 1.0]
-            wif_gmap += [(idx, g, a, c) for g, (a, c) in per_g.items()]
-    wdf = spark.createDataFrame(weight_rows, "cid int, key int, theta double")
-    part = (
-        if_df.join(F.broadcast(wdf), "cid")
-        .groupBy("key", "uh")
-        .agg(F.sum(F.col("theta") * F.col("inf_sc")).alias("inf"))
+    theta: dict[int, dict],
+    coef: dict[int, dict],
+) -> DataFrame:
+    """The aggregated IF of every output key as one lazy
+    ``(key, uh, inf)`` table: the IF table's θ-weighted rows and the
+    wif rows, each from one broadcast join, reduced by one
+    ``groupBy(key, uh)``. The IF table is read exactly once however
+    many keys there are (the plan property tests/test_plans.py
+    asserts)."""
+    wdf = spark.createDataFrame(
+        [(key, cid, w) for key, ws in theta.items() for cid, w in ws.items()],
+        "key int, cid int, theta double",
     )
-    # ≤ one row per (unit, egt): driver-known bound, zero-pass sizing
-    if_u_bound = n_hint * max(1, len(egts)) if n_hint else None
-    if not use_wif:
-        return (
-            egts,
-            atts,
-            (persist_rightsized(part, known_rows=if_u_bound)[0] if cache else part),
+    rows = if_df.join(F.broadcast(wdf), "cid").select(
+        "key", "uh", (F.col("theta") * F.col("inf_sc")).alias("inf")
+    )
+    coef_rows = [(key, g, c) for key, cs in coef.items() for g, c in cs.items()]
+    if coef_rows:
+        gdf = spark.createDataFrame(coef_rows, "key int, g_u double, coef double")
+        rows = rows.unionByName(
+            unitw.join(F.broadcast(gdf), "g_u").select(
+                "key", "uh", (F.col("w_u") * F.col("coef")).alias("inf")
+            )
         )
-    sdf = spark.createDataFrame(wif_scalars, "key int, sa double, p double")
-    gdf = spark.createDataFrame(wif_gmap, "key int, g_u double, alpha double, cnt double")
-    u = (
-        unitw.crossJoin(F.broadcast(sdf))
-        .join(F.broadcast(gdf), ["key", "g_u"], "left")
-        .na.fill({"alpha": 0.0, "cnt": 0.0})
-    )
-    wifv = (F.col("w_u") * F.col("alpha") - F.col("sa")) / F.col("p") - (
-        (F.col("w_u") * F.col("cnt") - F.col("p")) * F.col("sa") / (F.col("p") * F.col("p"))
-    )
-    wif_tbl = u.select("key", "uh", wifv.alias("wifv"))
-    combined = (
-        part.join(wif_tbl, ["key", "uh"], "full")
-        .select(
-            "key",
-            "uh",
-            (
-                F.coalesce(F.col("inf"), F.lit(0.0)) + F.coalesce(F.col("wifv"), F.lit(0.0))
-            ).alias("inf"),
-        )
-    )
-    return (
-        egts,
-        atts,
-        (persist_rightsized(combined, known_rows=if_u_bound)[0] if cache else combined),
-    )
+    return rows.groupBy("key", "uh").agg(F.sum("inf").alias("inf"))
 
 
 def compute_aggte(
@@ -266,153 +285,52 @@ def compute_aggte(
         pg = {r["g_u"]: r["pg"] for r in pg_rows}
         attgt._pg_cache = pg
 
-    def cell_info(row):
-        return {"cid": int(row.cid), "g": float(row.g), "t": float(row.t), "att": float(row.att), "pg": pg.get(float(row.g), 0.0)}
-
-    infos = [cell_info(r) for r in cells.itertuples()]
-
-    def per_egt_if(groups: dict[float, list[dict]], use_wif: bool, equal_w: bool = False):
-        return build_per_egt_if(
-            spark, fr.if_df, unitw, groups, use_wif, equal_w, n_hint=n
-        )
-
-    # ----- build groups per type ------------------------------------------
-    if typec == "simple":
-        keep = [k for k in infos if k["g"] <= k["t"] <= k["g"] + max_e]
-        if not keep:
-            raise DidError("no post-treatment cells to aggregate")
-        tot = sum(k["pg"] for k in keep)
-        att_o = sum(k["att"] * k["pg"] for k in keep) / tot
-        theta = [(k["cid"], k["pg"] / tot) for k in keep]
-        wif_part = _wif_df(unitw, keep, spark)
-        if_o = _agg_if(fr.if_df, theta, wif_part, spark).persist()
-        se_o = _se_of(if_o, n)
-        if bstrap:
-            bt = if_o.select(F.lit(0).alias("key"), "uh", "inf")
-            if attgt.pdata.has_cluster:
-                bt = attgt._cluster_collapse(bt, "key", "inf")
-                n_b = attgt._n_clusters()
-            else:
-                n_b = n
-            mb = mboot(bt, "key", "uh", "inf", n_b, biters, alp, attgt.seed)
-            se_o = mb.se.get(0, se_o)
-        if_o.unpersist()
-        return AggteResult(typec, att_o, se_o, [], [], [], z, min_e, max_e, balance_e, alp)
-
-    if typec == "group":
-        groups = {}
-        for k in infos:
-            if k["g"] <= k["t"] <= k["g"] + max_e:
-                groups.setdefault(k["g"], []).append(k)
-        egts, atts, if_u = per_egt_if(groups, use_wif=False, equal_w=True)
-    elif typec == "calendar":
-        min_g = min(k["g"] for k in infos)
-        groups = {}
-        for k in infos:
-            if k["t"] >= min_g and k["g"] <= k["t"]:
-                groups.setdefault(k["t"], []).append(k)
-        egts, atts, if_u = per_egt_if(groups, use_wif=True)
-    else:  # dynamic
-        groups = {}
-        tl = attgt.pdata.tlist
-        span = max(tl) - min(tl)
-        for k in infos:
-            e = k["t"] - k["g"]
-            if not (min_e <= e <= max_e):
-                continue
-            if balance_e is not None:
-                max_t = max(i["t"] for i in infos)
-                # R did balanced event-study window: cohorts observed
-                # for >= balance_e post periods, event times trimmed to
-                # balance_e - (t2 - t1) <= e <= balance_e — the lower
-                # trim keeps cohort composition IDENTICAL across every
-                # retained event time (without it, deep-negative e
-                # averages over a different cohort mix).
-                if max_t - k["g"] < balance_e or e > balance_e or e < balance_e - span:
-                    continue
-            groups.setdefault(e, []).append(k)
-        egts, atts, if_u = per_egt_if(groups, use_wif=True)
-
-    # ----- per-egt SEs in one aggregation pass (+ optional uniform band) ---
-    se_rows = if_u.groupBy("key").agg(
-        (F.sqrt(F.sum(F.col("inf") * F.col("inf"))) / n).alias("se")
-    ).collect()
-    se_map = {r["key"]: r["se"] for r in se_rows}
-    tiny = math.sqrt(2.220446049250313e-16) * 10
-    ses = [
-        float("nan") if se_map.get(i) is None or se_map[i] <= tiny else float(se_map[i])
-        for i in range(len(egts))
+    infos = [
+        {"cid": int(r.cid), "g": float(r.g), "t": float(r.t), "att": float(r.att),
+         "pg": pg.get(float(r.g), 0.0)}
+        for r in cells.itertuples()
     ]
+    egts, atts, att_o, theta, coef = aggte_weights(
+        typec, infos, attgt.pdata.tlist, balance_e, min_e, max_e
+    )
+    tbl = build_if_table(spark, fr.if_df, unitw, theta, coef)
+
+    # ----- every key's SE (overall included) from one pass over tbl ---------
+    nan = float("nan")
     crit = z
     if bstrap:
-        if attgt.pdata.has_cluster:
-            bt, n_b = attgt._cluster_collapse(if_u, "key", "inf"), attgt._n_clusters()
-        else:
-            bt, n_b = if_u, n
-        mb = mboot(bt, "key", "uh", "inf", n_b, biters, alp, attgt.seed)
-        ses = [mb.se.get(i, ses[i]) for i in range(len(egts))]
-        if cband:
+        clustered = attgt.pdata.has_cluster
+        mb = mboot(
+            attgt._cluster_collapse(tbl, "key", "inf") if clustered else tbl,
+            "key", "uh", "inf",
+            attgt._n_clusters() if clustered else n,
+            biters, alp, attgt.seed,
+            band_keys=range(len(egts)),
+        )
+        ses = mb.se  # one per key of tbl
+        if cband and egts:
             crit = mb.crit_val
             if not math.isfinite(crit) or crit < z:
                 warnings.warn("simultaneous critical value degenerate; reporting pointwise bands", stacklevel=2)
                 crit = z
             elif crit >= 7:
                 warnings.warn("simultaneous critical value very large; estimates may be unreliable", stacklevel=2)
-
-    # ----- overall ---------------------------------------------------------
-    if typec == "group":
-        pgg = {g: pg.get(g, 0.0) for g in egts}
-        tot = sum(pgg.values())
-        att_o = sum(a * pgg[g] for a, g in zip(atts, egts)) / tot
-        # overall wif at the group level (keepers = the cohorts)
-        wif_part = _wif_df(
-            unitw,
-            [{"g": g, "att": a, "pg": pgg[g]} for a, g in zip(atts, egts)],
-            spark,
-        )
-        wdf = spark.createDataFrame(
-            [(i, pgg[g] / tot) for i, g in enumerate(egts)], "key int, theta double"
-        )
-        part = (
-            if_u.join(F.broadcast(wdf), "key")
-            .groupBy("uh")
-            .agg(F.sum(F.col("theta") * F.col("inf")).alias("inf"))
-        )
-        if_o = (
-            part.join(wif_part, "uh", "full")
-            .select(
-                "uh",
-                (
-                    F.coalesce(F.col("inf"), F.lit(0.0)) + F.coalesce(F.col("wifv"), F.lit(0.0))
-                ).alias("inf"),
-            )
-            .persist()
-        )
     else:
-        if typec == "calendar":
-            o_keys = list(range(len(egts)))
-        else:  # dynamic: average post-treatment event times
-            o_keys = [i for i, e in enumerate(egts) if e >= 0]
-        att_o = sum(atts[i] for i in o_keys) / len(o_keys)
-        wdf = spark.createDataFrame(
-            [(i, 1.0 / len(o_keys)) for i in o_keys], "key int, theta double"
-        )
-        if_o = (
-            if_u.join(F.broadcast(wdf), "key")
-            .groupBy("uh")
-            .agg(F.sum(F.col("theta") * F.col("inf")).alias("inf"))
-            .persist()
-        )
-    se_o = _se_of(if_o, n)
-    if bstrap:
-        bt = if_o.select(F.lit(0).alias("key"), "uh", "inf")
-        if attgt.pdata.has_cluster:
-            bt, n_b = attgt._cluster_collapse(bt, "key", "inf"), attgt._n_clusters()
-        else:
-            n_b = n
-        mb_o = mboot(bt, "key", "uh", "inf", n_b, biters, alp, attgt.seed)
-        se_o = mb_o.se.get(0, se_o)
-    if_o.unpersist()
-    if_u.unpersist()
+        se_rows = tbl.groupBy("key").agg(
+            (F.sqrt(F.sum(F.col("inf") * F.col("inf"))) / n).alias("se")
+        ).collect()
+        ses = {r["key"]: r["se"] if r["se"] > _TINY_SE else nan for r in se_rows}
 
-    return AggteResult(typec, float(att_o), se_o, [float(e) for e in egts], [float(a) for a in atts], ses, float(crit), min_e, max_e, balance_e, alp)
+    return AggteResult(
+        typec,
+        float(att_o),
+        ses.get(OVERALL_KEY, nan),
+        [float(e) for e in egts],
+        [float(a) for a in atts],
+        [ses.get(i, nan) for i in range(len(egts))],
+        float(crit),
+        min_e,
+        max_e,
+        balance_e,
+        alp,
+    )

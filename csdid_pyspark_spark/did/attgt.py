@@ -169,14 +169,14 @@ class ATTgt:
             known_rows=if_rows,
         )
 
-        # analytic SEs: one aggregation over the IF table
-        se_rows = if_df.groupBy("cid").agg(
-            (F.sqrt(F.sum(F.col("inf_sc") * F.col("inf_sc"))) / n).alias("se")
-        ).collect()
-        se_by_cid = {r["cid"]: r["se"] for r in se_rows}
         crit_val = float(norm_ppf(1 - self.alp / 2))
-
-        if bstrap:
+        if not bstrap:
+            # analytic SEs: one aggregation over the IF table
+            se_rows = if_df.groupBy("cid").agg(
+                (F.sqrt(F.sum(F.col("inf_sc") * F.col("inf_sc"))) / n).alias("se")
+            ).collect()
+            se_by_cid = {r["cid"]: r["se"] for r in se_rows}
+        else:
             has_cl = self.pdata.has_cluster  # False when clustervars was just the id
             boot_if = self._cluster_collapse(if_df) if has_cl else if_df
             n_boot = self._n_clusters() if has_cl else n
@@ -190,7 +190,7 @@ class ATTgt:
                 alp=self.alp,
                 seed=self.seed,
             )
-            se_by_cid = {cid: mb.se.get(cid, float("nan")) for cid in se_by_cid}
+            se_by_cid = mb.se  # one per cell of the IF table
             if cband and math.isfinite(mb.crit_val):
                 crit_val = mb.crit_val
 
@@ -286,12 +286,12 @@ class ATTgt:
 
     # ------------------------------------------------------------------
     def unpersist(self) -> None:
-        """Release cached state (preprocessed panel + IF table). Call
+        """Release cached state (projected panel + IF table). Call
         when done with an estimator in a long-lived session — fit
         results (the driver-side tables) stay valid; only re-running
         aggte/bootstrap would recompute lineage."""
         try:
-            self.pdata.df.unpersist()
+            self.pdata.base.unpersist()
         except Exception:
             pass
         if self.fit_result is not None:

@@ -9,13 +9,23 @@ runs inside ``mapInPandas``: every partition emits only a
 (draws × columns) partial matrix, which one shuffle reduces. Driver
 memory is O(biters · columns) — never O(n).
 
+The kernel works per unique unit, not per IF row. Rows are sorted by
+unit hash within each partition, so a unit's rows (one per key it
+touches) arrive in one Arrow batch. Each batch is scattered
+(``np.add.at``) into a dense (units-in-batch × keys) matrix ``M``; the
+splitmix sign of each unit is drawn once per draw, and a block of
+draws is one GEMM ``signs(draws × units) @ M``. Sign evaluations fall
+from rows × biters to units × biters. ``M`` is built in unit chunks of
+at most ``_DENSE_CELLS`` cells and the sign block is block × chunk, so
+executor memory stays O(batch) whatever the key count.
+
 Quantile semantics match the reference exactly (inverted-CDF for both
 the IQR-based sigma and the sup-t critical value, mboot.py:128-137).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
@@ -33,13 +43,18 @@ _PARTIAL_SCHEMA = StructType(
         StructField("s", DoubleType(), False),
     ]
 )
+# cap on the cells of one dense (units × keys) IF chunk: 16 MB of doubles
+_DENSE_CELLS = 1 << 21
 
 
-def _splitmix_sign(uh: np.ndarray, b: int, seed: int) -> np.ndarray:
-    """Deterministic ±1 per (unit-hash, draw). uint64 wraparound is the
+def _splitmix_sign(uh: np.ndarray, b, seed: int) -> np.ndarray:
+    """Deterministic ±1 per (unit-hash, draw). ``b`` is a draw index or
+    an array of them broadcasting against ``uh`` (the kernel passes a
+    column of draws against a row of units). uint64 wraparound is the
     point of the mixing arithmetic — suppress the overflow warning."""
     with np.errstate(over="ignore"):
-        z = (uh.astype(np.uint64) + np.uint64(0x9E3779B97F4A7C15) * np.uint64(b + 1)
+        z = (uh.astype(np.uint64)
+             + np.uint64(0x9E3779B97F4A7C15) * (np.asarray(b) + 1).astype(np.uint64)
              + np.uint64(0xD1B54A32D192ED03) * np.uint64(seed + 1))
         z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
         z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
@@ -55,50 +70,50 @@ def bootstrap_draws(
     biters: int,
     seed: int,
     block: int = 100,
-) -> pd.DataFrame:
-    """Compute S[b, k] = Σ_units sign(unit,b) · inf(unit,k) for all
-    draws b and IF columns k. Returns a pandas frame (b, k, s) of size
-    biters × |keys| — tiny; everything larger stays on executors."""
+) -> tuple[list[int], np.ndarray]:
+    """Compute S[b, k] = Σ_rows sign(unit,b) · inf(row) for all draws b
+    and IF keys k in one pass. Returns ``(keys, S)``: the sorted keys
+    and the biters × |keys| draw matrix — tiny; everything larger stays
+    on executors."""
 
     df = if_df.select(
         F.col(key_col).cast("long").alias("k"),
         F.col(unit_hash_col).cast("long").alias("uh"),
         F.col(inf_col).cast("double").alias("v"),
-    )
+    ).sortWithinPartitions("uh")
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # accumulate a (biters × keys-seen) partial per partition,
-        # streaming Arrow batches so memory stays O(batch·block)
+        # accumulate a (biters × keys-seen) partial per partition
         acc: dict[int, np.ndarray] = {}
         for pdf in batches:
             if pdf.empty:
                 continue
-            order = np.argsort(pdf["k"].to_numpy(), kind="stable")
-            uh = pdf["uh"].to_numpy()[order]
-            v = pdf["v"].to_numpy()[order]
-            keys = pdf["k"].to_numpy()[order]
-            uniq, starts = np.unique(keys, return_index=True)
-            for k in uniq:
-                if int(k) not in acc:
-                    acc[int(k)] = np.zeros(biters)
-            for b0 in range(0, biters, block):
-                b1 = min(b0 + block, biters)
-                signs = np.empty((len(uh), b1 - b0))
-                for j, b in enumerate(range(b0, b1)):
-                    signs[:, j] = _splitmix_sign(uh, b, seed)
-                weighted = signs * v[:, None]  # rows × block
-                sums = np.add.reduceat(weighted, starts, axis=0)  # keys × block
-                for i, k in enumerate(uniq):
-                    acc[int(k)][b0:b1] += sums[i]
+            v = pdf["v"].to_numpy()
+            keys, kpos = np.unique(pdf["k"].to_numpy(), return_inverse=True)
+            units, upos = np.unique(pdf["uh"].to_numpy(), return_inverse=True)
+            out = np.zeros((biters, len(keys)))
+            chunk = max(1, _DENSE_CELLS // len(keys))
+            for u0 in range(0, len(units), chunk):
+                u1 = min(u0 + chunk, len(units))
+                rows = slice(None) if u1 - u0 == len(units) else (upos >= u0) & (upos < u1)
+                M = np.zeros((u1 - u0, len(keys)))
+                np.add.at(M, (upos[rows] - u0, kpos[rows]), v[rows])
+                for b0 in range(0, biters, block):
+                    draws = np.arange(b0, min(b0 + block, biters))[:, None]
+                    out[b0 : b0 + len(draws)] += (
+                        _splitmix_sign(units[None, u0:u1], draws, seed) @ M
+                    )
+            for i, k in enumerate(keys):
+                acc[int(k)] = acc.get(int(k), 0.0) + out[:, i]
         if not acc:
             return
-        bs, ks, ss = [], [], []
-        for k, col in acc.items():
-            bs.extend(range(biters))
-            ks.extend([k] * biters)
-            ss.extend(col)
+        ks = np.fromiter(acc, dtype=np.int64, count=len(acc))
         yield pd.DataFrame(
-            {"b": np.array(bs, dtype=np.int32), "k": np.array(ks, dtype=np.int64), "s": ss}
+            {
+                "b": np.tile(np.arange(biters, dtype=np.int32), len(ks)),
+                "k": np.repeat(ks, biters),
+                "s": np.concatenate([acc[int(k)] for k in ks]),
+            }
         )
 
     reduced = (
@@ -107,7 +122,11 @@ def bootstrap_draws(
         .agg(F.sum("s").alias("s"))
         .toPandas()
     )
-    return reduced
+    keys = sorted(int(k) for k in reduced["k"].unique())
+    kpos = reduced["k"].map({k: i for i, k in enumerate(keys)}).to_numpy()
+    S = np.zeros((biters, len(keys)))
+    S[reduced["b"].to_numpy(), kpos] = reduced["s"].to_numpy()
+    return keys, S
 
 
 @dataclass
@@ -116,7 +135,7 @@ class MbootResult:
     crit_val: float
     bres: np.ndarray  # biters × n_keys (sqrt(n)·mean of v·IF)
     keys: list[int]
-    V: np.ndarray | None = None  # bootstrap covariance over non-degenerate keys
+    V: np.ndarray | None = None  # bootstrap covariance over non-degenerate band keys
     # (reference mboot.py:125 — np.cov(bres); may be defective in degenerate cases)
 
 
@@ -129,18 +148,18 @@ def mboot(
     biters: int = 999,
     alp: float = 0.05,
     seed: int = 42,
+    band_keys: Iterable[int] | None = None,
 ) -> MbootResult:
     """Multiplier bootstrap over an IF table whose influence values are
     already scaled to the full unit universe (zeros implicit).
 
     bres[b,k] = sqrt(n) · (1/n) Σ_u v_ub · IF_u,k  — reference
-    mboot.py:103 — then IQR-based sigma, sup-t crit value, se."""
-    draws = bootstrap_draws(if_df, key_col, unit_hash_col, inf_col, biters, seed)
-    keys = sorted(draws["k"].unique())
-    kpos = {k: i for i, k in enumerate(keys)}
-    bres = np.zeros((biters, len(keys)))
-    bres[draws["b"].to_numpy(), draws["k"].map(kpos).to_numpy()] = draws["s"].to_numpy()
-    bres *= np.sqrt(n) / n
+    mboot.py:103 — then IQR-based sigma, sup-t crit value, se. Every
+    key gets an SE; the sup-t critical value and ``V`` span only
+    ``band_keys`` (default: all keys), so a summary column riding in
+    the same pass leaves the band unchanged."""
+    keys, draws = bootstrap_draws(if_df, key_col, unit_hash_col, inf_col, biters, seed)
+    bres = draws * (np.sqrt(n) / n)
 
     # non-degenerate columns (reference mboot.py:118-121)
     ndg = np.logical_and(
@@ -151,18 +170,21 @@ def mboot(
     q75 = np.quantile(b_use, 0.75, axis=0, method="inverted_cdf")
     q25 = np.quantile(b_use, 0.25, axis=0, method="inverted_cdf")
     sig = (q75 - q25) / (norm_ppf(0.75) - norm_ppf(0.25))
+    se_arr = np.full(len(keys), np.nan)
+    se_arr[ndg] = sig / np.sqrt(n)
+
+    band = np.isin(np.asarray(keys)[ndg], list(band_keys if band_keys is not None else keys))
+    b_band = b_use[:, band]
     with np.errstate(divide="ignore", invalid="ignore"):
-        bT = np.max(np.abs(b_use / sig), axis=1)
+        bT = np.max(np.abs(b_band / sig[band]), axis=1) if b_band.shape[1] else np.array([])
     bT = bT[np.isfinite(bT)]
     crit_val = float(np.quantile(bT, 1 - alp, method="inverted_cdf")) if len(bT) else float("nan")
 
-    se_arr = np.full(len(keys), np.nan)
-    se_arr[ndg] = sig / np.sqrt(n)
-    V = np.cov(b_use, rowvar=False) if b_use.shape[1] else None
+    V = np.cov(b_band, rowvar=False) if b_band.shape[1] else None
     return MbootResult(
         se={k: float(se_arr[i]) for i, k in enumerate(keys)},
         crit_val=crit_val,
         bres=bres,
-        keys=[int(k) for k in keys],
+        keys=keys,
         V=V,
     )

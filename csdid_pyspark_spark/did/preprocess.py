@@ -44,6 +44,7 @@ class PanelData:
     gname: str
     has_cluster: bool = False
     warnings_: list[str] = field(default_factory=list)
+    base: DataFrame | None = None  # the persisted projection ``df`` filters
 
 
 def preprocess_did(
@@ -110,7 +111,8 @@ def preprocess_did(
     # pass, and NO extra pass is spent either way (cache.py).
     from csdid_pyspark_spark.cache import persist_rightsized
 
-    df, _ = persist_rightsized(data.select(*sel), known_rows=rows_hint)
+    base, _ = persist_rightsized(data.select(*sel), known_rows=rows_hint)
+    df = base
 
     if clustervar:
         # time-invariance within unit (reference mboot.py:96-99 intent;
@@ -286,4 +288,5 @@ def preprocess_did(
         gname=gname,
         has_cluster=bool(clustervar),
         warnings_=warns,
+        base=base,
     )

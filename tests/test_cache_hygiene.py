@@ -95,3 +95,34 @@ def test_query_releases_every_persist(name, spark, persist_ledger):
         f"release_cache — either release inside the query (eager consumers) "
         f"or carry_cache the attachment onto the returned frame"
     )
+
+
+def test_attgt_unpersist_releases_every_persist(spark):
+    """An estimator's whole life — construct, bootstrap fit, all four
+    aggregations, ``unpersist()`` — leaves no RDD persisted: the
+    projected panel ``preprocess_did`` caches, the cell and IF tables
+    and every aggregation pass are released. Compared by RDD id, so an
+    earlier test's cache cleaned up meanwhile cannot mask a leak."""
+    import numpy as np
+    import pandas as pd
+
+    from csdid_pyspark_spark.did import ATTgt
+
+    rng = np.random.default_rng(4)
+    rows = []
+    for i in range(90):
+        g = float([0, 3, 4][i % 3])
+        for t in (1, 2, 3, 4):
+            rows.append((i, t, g, 0.1 * t + (1.0 if 0 < g <= t else 0.0) + rng.normal(0, 0.1)))
+    sdf = spark.createDataFrame(pd.DataFrame(rows, columns=["id", "t", "g", "y"]))
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    est = ATTgt(sdf, "y", "t", "id", "g", allow_unbalanced_panel=False, biters=49)
+    est.fit("reg", bstrap=True, cband=True)
+    for typec in ("simple", "group", "calendar", "dynamic"):
+        est.compute_aggte(typec)
+    est.unpersist()
+    assert persisted() - before == set()

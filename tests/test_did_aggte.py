@@ -114,7 +114,7 @@ def test_group_parity(fitted, numpy_cells):
 def test_calendar_parity(fitted, numpy_cells):
     nc = numpy_cells
     out = fitted.compute_aggte("calendar")
-    atts = []
+    atts, infs = [], []
     for t in (3.0, 4.0):
         ks = [dict(c, pg=nc["pg"][c["g"]]) for c in nc["cells"] if c["t"] == t and c["g"] <= t]
         tot = sum(k["pg"] for k in ks)
@@ -123,10 +123,13 @@ def test_calendar_parity(fitted, numpy_cells):
         wif = _wif_np(ks, nc["w_u"], nc["g_u"])
         inf_t = inf_t + wif @ np.array([k["att"] for k in ks])
         atts.append(att_t)
+        infs.append(inf_t)
         i = out.egt.index(t)
         assert out.att_egt[i] == pytest.approx(att_t, abs=1e-8)
         assert out.se_egt[i] == pytest.approx(_se(inf_t, nc["n"]), rel=1e-6)
     assert out.overall_att == pytest.approx(np.mean(atts), abs=1e-8)
+    # overall = mean of the per-period aggregates, wif terms included
+    assert out.overall_se == pytest.approx(_se(np.mean(infs, axis=0), nc["n"]), rel=1e-6)
 
 
 def test_dynamic_parity_and_truth(fitted, numpy_cells):
@@ -134,12 +137,21 @@ def test_dynamic_parity_and_truth(fitted, numpy_cells):
     out = fitted.compute_aggte("dynamic")
     # event times: -2, -1 (pre), 0, 1 (post)
     assert out.egt == [-2.0, -1.0, 0.0, 1.0]
+    post_infs = []
     for e in out.egt:
         ks = [dict(c, pg=nc["pg"][c["g"]]) for c in nc["cells"] if c["t"] - c["g"] == e]
         tot = sum(k["pg"] for k in ks)
         att_e = sum(k["att"] * k["pg"] for k in ks) / tot
+        inf_e = sum((k["pg"] / tot) * k["inf"] for k in ks)
+        wif = _wif_np(ks, nc["w_u"], nc["g_u"])
+        inf_e = inf_e + wif @ np.array([k["att"] for k in ks])
+        if e >= 0:
+            post_infs.append(inf_e)
         i = out.egt.index(e)
         assert out.att_egt[i] == pytest.approx(att_e, abs=1e-8)
+        assert out.se_egt[i] == pytest.approx(_se(inf_e, nc["n"]), rel=1e-6)
+    # overall = mean of the post-treatment event-time aggregates
+    assert out.overall_se == pytest.approx(_se(np.mean(post_infs, axis=0), nc["n"]), rel=1e-6)
     # truth: att(e) ≈ e+1 post, ≈ 0 pre; overall = mean over e>=0
     for e, a, s in zip(out.egt, out.att_egt, out.se_egt):
         truth = e + 1 if e >= 0 else 0.0

@@ -87,17 +87,32 @@ def test_asof_join_single_window_shuffle(spark, sf_dir):
     assert "Window" in plan
 
 
+def _live_plan(plan: str) -> str:
+    """The plan text minus the subtrees under ``InMemoryRelation``: a
+    cached relation prints its materializing lineage as replay text,
+    which this query does not run."""
+    live, skip_below = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = depth if "InMemoryRelation" in line else None
+        live.append(line)
+    return "\n".join(live)
+
+
 def test_dynamic_aggte_single_pass_over_if_table(spark):
-    """The per-egt aggregation path must read the (persisted) IF table
-    exactly once no matter how many event times are aggregated — the
+    """Every aggregation is one fused (key, uh, inf) table — each event
+    time plus the overall ATT as key -1 — that reads the (persisted) IF
+    table exactly once no matter how many keys there are: the
     single-pass design that keeps aggte O(|IF|) instead of
-    O(|egt|·|IF|). Guarded at the plan level: one cache scan, weights
-    and wif joined via broadcast only, a single non-broadcast shuffle
-    for the (key, uh) reduction plus one for the wif alignment join."""
+    O(|egt|·|IF|). Guarded at the plan level: one cache scan, cell
+    weights and wif coefficients joined via broadcast only, and a single
+    shuffle, the (key, uh) reduction."""
     import pandas as pd
 
     from csdid_pyspark_spark.did import ATTgt
-    from csdid_pyspark_spark.did.aggte_ops import build_per_egt_if
+    from csdid_pyspark_spark.did.aggte_ops import OVERALL_KEY, aggte_weights, build_if_table
 
     rows = []
     for i in range(120):
@@ -113,33 +128,24 @@ def test_dynamic_aggte_single_pass_over_if_table(spark):
         {"cid": int(r.cid), "g": float(r.g), "t": float(r.t), "att": 0.5, "pg": 0.33}
         for r in est.fit_result.cell_map.itertuples()
     ]
-    groups: dict = {}
-    for k in infos:
-        groups.setdefault(k["t"] - k["g"], []).append(k)
-    # cache=False: assert on the LAZY single-pass plan. The production
-    # path wraps the same plan in a right-sized cache (persist_rightsized),
-    # whose InMemoryRelation nests this plan as replay text — counting
-    # scan lines across that nesting would double-count the one real scan.
-    _, _, if_u = build_per_egt_if(
-        spark, est.fit_result.if_df, est._unit_weights(), groups, use_wif=True,
-        cache=False,
-    )
-    plan = if_u._jdf.queryExecution().executedPlan().toString()
+    egts, _, _, theta, coef = aggte_weights("dynamic", infos, est.pdata.tlist)
+    assert set(theta) == set(coef) == {OVERALL_KEY, *range(len(egts))}
+    tbl = build_if_table(spark, est.fit_result.if_df, est._unit_weights(), theta, coef)
+    plan = _live_plan(tbl._jdf.queryExecution().executedPlan().toString())
     est.unpersist()
-    # the cached IF table (columns cid, uh, inf_sc) is scanned exactly
-    # once inside the whole nested plan
+    # the cached IF table (columns cid, uh, inf_sc) is scanned exactly once
     if_scans = [
         ln for ln in plan.splitlines()
         if "InMemoryTableScan" in ln and "inf_sc" in ln
     ]
     assert len(if_scans) == 1, plan
-    # weights and wif joins are broadcast-only; the live shuffles of the
-    # aggte path (keyed on the aggregation key) are exactly the (key,uh)
-    # reduction and the wif alignment — lineage exchanges inside the
-    # cached IF relation are replay text, keyed on (cid,_id), not these
-    live_shuffles = plan.count("Exchange hashpartitioning(key#")
-    assert live_shuffles <= 2, plan
-    assert plan.count("SortMergeJoin") <= 1, plan  # only the (key,uh) full join
+    # both lookups are broadcast; nothing else joins
+    for node in ("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert node not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    # the one live shuffle keyed on the aggregation key: the (key, uh)
+    # reduction
+    assert plan.count("Exchange hashpartitioning(key#") <= 1, plan
 
 
 def test_q4_semi_join_with_nonequi_condition(spark, sf_dir):

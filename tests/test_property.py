@@ -61,6 +61,28 @@ def test_splitmix_sign_deterministic_and_balanced(uhs, seed):
     assert len(np.unique(arr)) < 30 or not (s1 == s3).all()
 
 
+@given(
+    st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), min_size=1, max_size=40),
+    st.integers(min_value=0, max_value=2**31),
+    st.integers(min_value=0, max_value=5000),
+)
+@settings(max_examples=100, deadline=None)
+def test_splitmix_sign_draw_column_equals_scalar_draws(uhs, seed, b0):
+    """The bootstrap kernel draws a block of signs at once, a column of
+    draw indices against a row of units; each row of that block must be
+    the scalar-draw sign vector, bit for bit."""
+    import numpy as np
+
+    from csdid_pyspark_spark.did.mboot import _splitmix_sign
+
+    arr = np.array(uhs, dtype=np.int64)
+    draws = np.arange(b0, b0 + 7)
+    block = _splitmix_sign(arr[None, :], draws[:, None], seed)
+    assert block.shape == (len(draws), len(arr))
+    for j, b in enumerate(draws):
+        assert (block[j] == _splitmix_sign(arr, int(b), seed)).all()
+
+
 def test_salted_join_equivalence(spark):
     """salted_join must return exactly the plain join's rows."""
     from csdid_pyspark_spark.operators.skew import salted_join
